@@ -14,7 +14,10 @@ join), no driver-side graph state. Each round ends in an eager
 ``localCheckpoint`` to truncate lineage — an iterative self-join otherwise
 compounds the plan exponentially and re-executes prior rounds on every
 action. On a cluster, swap localCheckpoint for a reliable checkpoint dir;
-the call site is the single place that changes.
+the call site is the single place that changes. The input edges are
+usually a lazy frame (e.g. ``ngram_jaccard_pairs``), so the first eager
+checkpoint executes the whole upstream pair plan: a profile that times
+this loop includes the cost of generating its edges.
 
 Convergence is detected by an edge-set fingerprint (count + sum of
 xxhash64(u,v)) — O(edges) with no driver-side collection, robust enough for

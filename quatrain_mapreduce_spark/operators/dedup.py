@@ -6,8 +6,10 @@ extensions, each designed for the 100 TB path:
 
 - exact_dedup:     hash-groupBy on a normalized fingerprint — one shuffle,
                    map-side combinable.
-- ngram_jaccard_pairs: blocked pairwise verification — O(block²), intended
-                   for final verification within candidate blocks only.
+- ngram_jaccard_pairs: exact blocked n-gram Jaccard by inverted-index
+                   overlap counting — (doc, shingle) rows, equi-join on
+                   the shingle, count per pair. Ground truth; its join
+                   rows grow with shingle document frequency per block.
 - minhash_lsh_pairs: shingle → minhash signature → banded LSH buckets →
                    bucket self-join → exact-jaccard verify. The standard
                    near-dup pipeline (Broder '97): candidate generation is
@@ -91,90 +93,111 @@ def ngram_jaccard_pairs(
     block_col: str,
     n: int = 2,
     threshold: float = 0.8,
-    length_band: bool = True,
 ) -> DataFrame:
-    """Blocked pairwise n-gram Jaccard near-dup pairs.
+    """Exact blocked n-gram Jaccard near-dup pairs: (a_id, b_id, jac) for
+    every same-block pair with J >= ``threshold``, a_id < b_id.
 
-    Blocking key = ``block_col`` composed with a logarithmic shingle-count
-    band: J(A,B) >= t implies |A|/|B| in [t, 1/t], so banding set sizes at
-    ratio 1/t and probing each doc's own band ± 1 is *complete* for the
-    threshold (floor over log-ratio <= 1 differs by at most one band) and
-    restricts every block to near-equal-length docs. Emits
-    (a_id, b_id, jac) for pairs ≥ threshold, a < b.
+    Kernel — an inverted-index overlap count, the MapReduce set-similarity
+    join (Vernica, Carey & Li, SIGMOD 2010): each document's distinct
+    shingle set, carried as xxhash64 longs (8-byte join keys), is exploded
+    to one (doc, block, band, size, tok) row, the two sides are
+    equi-joined on (block, band, tok), and ``groupBy(pair).count()`` is
+    |A∩B| for every pair that shares a shingle. A pair sharing nothing has J = 0 and is never emitted, which
+    is the right answer for any t > 0 — so no per-pair set intersection is
+    ever computed, and pairs are only touched through the shingles they
+    share.
 
-    SCALE LIMIT (measured, SCALING.md r6): within-block candidate count is
-    O(block²), and block sizes grow linearly with corpus size at a fixed
-    length/language distribution — so this EXACT enumeration is quadratic
-    in the corpus and exists as the oracle-checkable ground truth, not the
-    production path. At scale, generate candidates with
-    ``minhash_lsh_pairs`` (linear) and verify them with ``verify_pairs``
-    (touches candidates only) — the composition ``dedup_components_lsh``
-    demonstrates, which stays flat across a 10× data step while this
-    blocked form grows ~14×.
+    Blocking: ``block_col`` composed with a logarithmic size band. J >= t
+    implies |A|/|B| in [t, 1/t], so with bands of ratio 1/t a qualifying
+    pair lies in the same or adjacent bands. Side A probes its own band and
+    both neighbours under a.id < b.id, so every pair is enumerated once,
+    from its smaller id. At t = 1, J = 1 forces equal sizes, so the exact
+    size is the band and only it is probed. The id order is a plain
+    attribute comparison in the join, so Catalyst proves a consumer's
+    ``a_id = b_id`` filter empty: ``connected_components``' self-loop
+    branch is pruned instead of re-running this join. (Probing only band
+    and band + 1 and emitting least/greatest of the ids joins fewer rows
+    but hides that order; ``dedup_components`` measured slower with it.)
 
-    ``length_band=False`` degrades to plain block_col blocking (the verify
-    stage inside LSH buckets, where the bucket already bounds block size).
+    Exactness: before counting, join rows are pruned by the size bound
+    min(na, nb) / max(na, nb) >= t. That drops no true pair even in
+    floating point: J <= min/max, and IEEE division is correctly rounded
+    and monotone, so fl(i/u) <= fl(min/max). The kept pairs' ``jac`` is
+    i / (na + nb - i), the same int/int IEEE division as a per-pair
+    intersection would give — bit-identical, so the DuckDB oracle compares
+    it without rounding. A 64-bit shingle-hash collision inside one pair
+    (probability ~pairs * |union|^2 / 2^64) is the only way this can differ
+    from string-set Jaccard, and the oracle computes the string form.
+
+    Trade: the count shuffles one row per shared (pair, shingle) — more
+    shuffle bytes than probing pairs in place — in exchange for dropping
+    the hash-set intersection of every same-band candidate pair, nearly
+    all of which share little or nothing. Measured in the benchmark's
+    ``llm_dedup_batch`` (sf0.1, 4-core host): ``dedup_components`` executor
+    CPU 20.2 -> 4.4 s, shuffle write 0.1 -> 9.8 MB, no spill.
+
+    SCALE LIMIT: a shingle shared by k docs of one block and band yields
+    k² join rows, and block sizes grow with the corpus, so this exact
+    enumeration is the oracle-checkable ground truth, not the 100 TB path.
+    At scale, generate candidates with ``minhash_lsh_pairs`` (linear) and
+    verify them with ``verify_pairs`` (touches candidates only) — the
+    composition ``dedup_components_lsh`` demonstrates.
     """
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold!r}")
     # filter on the CHEAP equivalent predicate (token count >= n) instead of
     # size(sh) > 0: Catalyst pushes filters through Repartition, and a pushed
     # filter over the full shingle expression would evaluate it on the
     # pre-spread (often single) input partition.
-    #
-    # The shingle SET is carried as xxhash64 longs, not strings: Jaccard
-    # only needs set identity, and array_intersect on 8-byte longs is
-    # ~2.4x faster than on shingle strings (measured on the verify step,
-    # 3.0 s -> 1.25 s at sf0.1) while also shrinking the persisted frame.
-    # A 64-bit collision inside one candidate pair's union (probability
-    # ~pairs * |union|^2 / 2^64, ~1e-15 here) is the only way this can
-    # differ from string-set Jaccard — and the DuckDB oracle computes the
-    # string form, so it would be caught, not masked.
-    sh = (
+    docs = (
         spread(df)
         .where(F.size(tokenize(text_col)) >= n)
         .select(
-            F.col(id_col),
+            F.col(id_col).alias("id"),
             F.col(block_col).alias("block"),
             F.transform(word_shingles(text_col, n), lambda g: F.xxhash64(g)).alias("sh"),
         )
+        .withColumn("n", F.size("sh"))
     )
-    # both self-join sides consume the shingle frame — persist the expensive
-    # narrow stage once instead of shingling the corpus twice (measured at
-    # sf0.1: 5.1 s -> 2.6 s; same trade as minhash_lsh_pairs' cache).
-    # MEMORY_AND_DISK so a 100 TB shingle set spills instead of recomputing.
-    from pyspark.storagelevel import StorageLevel
-
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    if length_band:
-        if threshold >= 1.0:
-            # log(1/t) is 0 at t=1 and the band expression divides by it
-            # (review finding). J = 1 forces EQUAL set sizes, so the exact
-            # size is itself the complete band — probe only the own band.
-            sh = sh.withColumn("band", F.size("sh").cast("long"))
-            a = sh.withColumn("probe", F.col("band")).alias("a")
-        else:
-            band = F.floor(F.log(F.size("sh").cast("double")) / F.lit(math.log(1.0 / threshold)))
-            sh = sh.withColumn("band", band)
-            # probe side A into its own and both adjacent bands; at most one
-            # probe equals B's band, so each (a,b) pair appears exactly once
-            # — no distinct
-            a = sh.withColumn("probe", F.explode(F.array(F.col("band") - 1, F.col("band"), F.col("band") + 1))).alias("a")
-        b = sh.alias("b")
-        cond = (
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.probe") == F.col("b.band"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        )
+    if threshold >= 1.0:
+        # log(1/t) is 0 at t = 1; the exact size is the complete band
+        docs = docs.withColumn("band", F.col("n").cast("long"))
+        probes = F.array(F.col("band"))
     else:
-        a, b = sh.alias("a"), sh.alias("b")
-        cond = (F.col("a.block") == F.col("b.block")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    return (
+        docs = docs.withColumn(
+            "band", F.floor(F.log(F.col("n").cast("double")) / F.lit(math.log(1.0 / threshold)))
+        )
+        probes = F.array(F.col("band") - 1, F.col("band"), F.col("band") + 1)
+    # both join sides consume the exploded rows — persist them once instead
+    # of shingling the corpus twice; MEMORY_AND_DISK so a large index spills
+    # instead of recomputing
+    toks = docs.select("id", "block", "band", "n", F.explode("sh").alias("tok")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    a = toks.withColumn("probe", F.explode(probes)).alias("a")
+    b = toks.alias("b")
+    na, nb = F.col("a.n"), F.col("b.n")
+    cond = (
+        (F.col("a.block") == F.col("b.block"))
+        & (F.col("a.probe") == F.col("b.band"))
+        & (F.col("a.tok") == F.col("b.tok"))
+        & (F.col("a.id") < F.col("b.id"))
+        & (F.least(na, nb) / F.greatest(na, nb) >= threshold)
+    )
+    inter = (
         a.join(b, cond)
         .select(
-            F.col(f"a.{id_col}").alias("a_id"),
-            F.col(f"b.{id_col}").alias("b_id"),
-            # raw |∩|/|∪| — an int/int IEEE division, bit-identical across
-            # engines, so no rounding needed for oracle comparison
-            _jaccard(F.col("a.sh"), F.col("b.sh")).alias("jac"),
+            F.col("a.id").alias("a_id"),
+            F.col("b.id").alias("b_id"),
+            (na + nb).alias("sizes"),
+        )
+        .groupBy("a_id", "b_id", "sizes")
+        .count()
+    )
+    return (
+        inter.select(
+            "a_id", "b_id",
+            (F.col("count") / (F.col("sizes") - F.col("count"))).alias("jac"),
         )
         .where(F.col("jac") >= threshold)
     )

@@ -44,10 +44,13 @@ from pyspark.sql import functions as F
 # nodes REBUILT PER LLOYD PASS. At production index sizes (n_lists=4096,
 # dim=768, or k=256) that is millions of nodes: plan analysis/serialization
 # dominates runtime or exhausts driver memory. Above this many embedded
-# doubles the operators fall back to the broadcast-join + max_by/min_by
-# shape (the pre-r13 form): its SortAggregate pair is a map-side
-# pre-collapse of the N×C expansion (the documented cdc_apply_orders class)
-# and its plan size is O(1) in the index parameters.
+# doubles the operators ship the SAME centroid/codeword array as a column
+# of a broadcast-joined frame instead (``_with_codebook``,
+# ``ivf_build.assign``): plan size O(1) in the index parameters, and the
+# identical fold runs over the identical row order — a broadcast join
+# preserves the streamed side's partitions — so assignments, codes AND the
+# Lloyd means aggregated from them are bit-identical on both sides of the
+# gate.
 FOLD_MAX_LITERALS = int(os.environ.get("SPARK_GRAFT_FOLD_MAX_LITERALS", "50000"))
 
 
@@ -320,39 +323,33 @@ def ivf_build(
 
     def assign(cents: list[list[float]]) -> DataFrame:
         # Scan-local argmax fold over the (index-metadata-sized) centroid
-        # list embedded as a literal — zero shuffle, zero row expansion.
-        # The former crossJoin + max_by(list_id, struct(sim, -list_id))
-        # planned as a SortAggregate pair over the N×C expansion (a struct
-        # extremum buffer is not hash-aggregatable — r13, same fix as the
-        # SemDeDup assignment): two full sorts of C× the corpus per Lloyd
-        # pass. The fold keeps max_by's exact tie-break (ascending list_id,
-        # replace on strictly-greater cosine => lowest list_id wins ties)
-        # and the same ``cosine`` fold arithmetic, so assignments are
-        # bit-identical. Above FOLD_MAX_LITERALS embedded doubles the
-        # literal plan itself becomes the bottleneck — fall back to the
-        # broadcast-join + max_by shape (same tie-break by construction).
+        # list — zero shuffle, zero row expansion. The former crossJoin +
+        # max_by(list_id, struct(sim, -list_id)) planned as a SortAggregate
+        # pair over the N×C expansion (a struct extremum buffer is not
+        # hash-aggregatable — r13, same fix as the SemDeDup assignment):
+        # two full sorts of C× the corpus per Lloyd pass. The fold keeps
+        # max_by's exact tie-break (ascending list_id, replace on
+        # strictly-greater cosine => lowest list_id wins ties). Up to
+        # FOLD_MAX_LITERALS embedded doubles the list is a literal; above,
+        # the literal plan itself becomes the bottleneck, so the same list
+        # rides a one-row broadcast cross join (same fold, same row order:
+        # assignments and means are bit-identical either way).
         if len(cents) * dim > FOLD_MAX_LITERALS:
-            sim = cosine(F.col("vec"), F.col("c_vec"))
-            return (
-                c.crossJoin(F.broadcast(centroid_df(cents)))
-                .groupBy(id_col)
-                .agg(
-                    F.first("vec").alias("vec"),
-                    F.max_by(
-                        "list_id",
-                        F.struct(sim.alias("s"), (-F.col("list_id")).alias("t")),
-                    ).alias("list_id"),
+            entries = [(i, [float(x) for x in v]) for i, v in enumerate(cents)]
+            src = c.crossJoin(F.broadcast(spark.createDataFrame(
+                [(entries,)], "cents array<struct<lid:int,c_vec:array<double>>>"
+            )))
+            cent_arr = F.col("cents")
+        else:
+            src = c
+            cent_arr = F.array(*[
+                F.struct(
+                    F.lit(i).alias("lid"),
+                    F.array(*[F.lit(float(x)) for x in v])
+                     .cast("array<double>").alias("c_vec"),
                 )
-                .select(F.col(id_col), "vec", "list_id")
-            )
-        cent_arr = F.array(*[
-            F.struct(
-                F.lit(i).alias("lid"),
-                F.array(*[F.lit(float(x)) for x in v])
-                 .cast("array<double>").alias("c_vec"),
-            )
-            for i, v in enumerate(cents)
-        ])
+                for i, v in enumerate(cents)
+            ])
         scored = F.transform(
             cent_arr,
             lambda ct: F.struct(
@@ -366,7 +363,7 @@ def ivf_build(
                      F.lit(None).cast("int").alias("lid")),
             lambda a, x: F.when(x["s"] > a["s"], x).otherwise(a),
         )
-        return c.select(F.col(id_col), "vec", best["lid"].alias("list_id"))
+        return src.select(F.col(id_col), "vec", best["lid"].alias("list_id"))
 
     for _ in range(lloyd_iters):
         assigned = assign(centroids)
@@ -614,31 +611,51 @@ def activity_profile_knn(events: DataFrame, user_col: str, ts_col: str,
     )
 
 
-def _nearest_code(book: dict[tuple[int, int], list[float]]) -> Column:
-    """Scan-local nearest-codeword id for a (sub_id, sv) row: the literal
-    per-subspace codeword arrays are indexed by ``sub_id`` (``element_at``)
-    and folded for the min-L2 code, ties to the LOWEST code_id — exactly
-    the ordering of ``min_by(code_id, struct(d, code_id))``. The former
-    broadcast-join + min_by(struct) shape planned as a SortAggregate pair
-    over the N·m subvector rows (a struct extremum buffer is not
-    hash-aggregatable — r13, same fix as the IVF/SemDeDup assignments);
-    this fold is zero-shuffle and keeps the identical L2 fold arithmetic.
-    The codebook is bounded index metadata (m·k rows) by construction.
-    """
-    subs_sorted = sorted({s for s, _ in book})
+def _with_codebook(
+    subs: DataFrame, book: dict[tuple[int, int], list[float]], dim: int,
+) -> tuple[DataFrame, Column]:
+    """``subs`` (sub_id, sv) rows and, as a column, the codewords of each
+    row's subspace — array<struct<cid, c_vec>> in ascending code_id, the
+    input of ``_nearest_code``. Up to FOLD_MAX_LITERALS embedded doubles
+    the per-subspace arrays are literals indexed by ``sub_id``; above, they
+    ride a broadcast join on ``sub_id`` (one row per subspace; the join
+    keeps ``subs``' partitions and row order, so codes and the Lloyd means
+    are bit-identical on both sides of the gate)."""
+    per_sub = [
+        (s, [(cid, book[(s, cid)]) for cid in sorted(c for s2, c in book if s2 == s)])
+        for s in sorted({s for s, _ in book})
+    ]
+    n_codes = max((c for _, c in book), default=-1) + 1
+    if n_codes * dim > FOLD_MAX_LITERALS:
+        frame = subs.sparkSession.createDataFrame(
+            per_sub, "sub_id int, codes array<struct<cid:int,c_vec:array<double>>>"
+        )
+        return subs.join(F.broadcast(frame), "sub_id"), F.col("codes")
     books_arr = F.array(*[
         F.array(*[
             F.struct(
                 F.lit(cid).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in book[(s, cid)]])
+                F.array(*[F.lit(float(x)) for x in v])
                  .cast("array<double>").alias("c_vec"),
             )
-            for cid in sorted(c for s2, c in book if s2 == s)
+            for cid, v in codes
         ])
-        for s in subs_sorted
+        for _, codes in per_sub
     ])
-    codes_here = F.element_at(books_arr, F.col("sub_id") + 1)
+    return subs, F.element_at(books_arr, F.col("sub_id") + 1)
 
+
+def _nearest_code(codes_here: Column) -> Column:
+    """Scan-local nearest-codeword id for a (sub_id, sv) row over its
+    subspace's codewords (``_with_codebook``), folded for the min-L2 code,
+    ties to the LOWEST code_id — exactly the ordering of
+    ``min_by(code_id, struct(d, code_id))``. The former broadcast-join +
+    min_by(struct) shape planned as a SortAggregate pair over the N·m
+    subvector rows (a struct extremum buffer is not hash-aggregatable —
+    r13, same fix as the IVF/SemDeDup assignments); this fold is
+    zero-shuffle. The codebook is bounded index metadata (m·k rows) by
+    construction.
+    """
     def l2(cv: Column) -> Column:
         return F.aggregate(
             F.zip_with(F.col("sv"), cv, lambda a, b: (a - b) * (a - b)),
@@ -730,31 +747,10 @@ def pq_train(
         )
 
     for _ in range(lloyd_iters):
-        # same literal-fold gate as ivf_build.assign: k·dim embedded
-        # doubles per Lloyd pass; above the cap, broadcast-join + min_by
-        # (identical argmin + tie-break, plan size O(1) in k·dim)
-        if k * dim > FOLD_MAX_LITERALS:
-            l2 = F.aggregate(
-                F.zip_with(F.col("sv"), F.col("c_vec"),
-                           lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x,
-            )
-            assigned = (
-                subs.join(F.broadcast(book_df()), "sub_id")
-                .groupBy(id_col, "sub_id")
-                .agg(
-                    F.first("sv").alias("sv"),
-                    F.min_by(
-                        "code_id",
-                        F.struct(l2.alias("d"), F.col("code_id").alias("t")),
-                    ).alias("code_id"),
-                )
-            )
-        else:
-            assigned = subs.select(
-                F.col(id_col), "sub_id", "sv",
-                _nearest_code(book).alias("code_id"),
-            )
+        with_book, codes = _with_codebook(subs, book, dim)
+        assigned = with_book.select(
+            F.col(id_col), "sub_id", "sv", _nearest_code(codes).alias("code_id"),
+        )
         means = (
             assigned.groupBy("sub_id", "code_id")
             .agg(F.array(*[F.avg(F.col("sv")[i]) for i in range(sub)]).alias("mv"))
@@ -785,9 +781,9 @@ def pq_encode(
     per batch, should pass the already-collected dict form
     ``{(sub_id, code_id): c_vec}`` instead (``pq_train`` holds exactly
     that) — the dict overload triggers no job. Above FOLD_MAX_LITERALS
-    embedded doubles (k·dim) the fold would itself bloat the plan; the
-    encode then falls back to a broadcast-join + min_by argmin (identical
-    codes and tie-break, O(1) plan size).
+    embedded doubles (k·dim) literals would bloat the plan; the same fold
+    then reads the codewords from a broadcast-joined column
+    (``_with_codebook`` — identical codes, O(1) plan size).
     """
     from quatrain_mapreduce_spark.operators.util import spread
 
@@ -809,30 +805,9 @@ def pq_encode(
         book = codebook
     else:
         book = {(r["sub_id"], r["code_id"]): r["c_vec"] for r in codebook.collect()}
-    n_codes = max((c for _, c in book), default=-1) + 1
-    if n_codes * dim > FOLD_MAX_LITERALS:
-        spark = corpus.sparkSession
-        book_frame = spark.createDataFrame(
-            [(s, cid, v) for (s, cid), v in sorted(book.items())],
-            "sub_id int, code_id int, c_vec array<double>",
-        )
-        l2 = F.aggregate(
-            F.zip_with(F.col("sv"), F.col("c_vec"),
-                       lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-        return (
-            subs.join(F.broadcast(book_frame), "sub_id")
-            .groupBy(id_col, "sub_id")
-            .agg(
-                F.min_by(
-                    "code_id",
-                    F.struct(l2.alias("d"), F.col("code_id").alias("t")),
-                ).alias("code_id")
-            )
-        )
-    return subs.select(
-        F.col(id_col), "sub_id", _nearest_code(book).alias("code_id")
+    with_book, codes = _with_codebook(subs, book, dim)
+    return with_book.select(
+        F.col(id_col), "sub_id", _nearest_code(codes).alias("code_id")
     )
 
 

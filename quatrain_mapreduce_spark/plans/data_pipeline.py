@@ -72,16 +72,17 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT a_id, b_id, jac FROM pairs WHERE jac >= 0.8
     """,
-    doc="Blocked pairwise word-bigram Jaccard near-dup pairs. Block = "
-        "(lang, log-length band ± 1): complete for J>=0.8 by the size-ratio "
-        "bound, and every block is near-equal-length docs, so sum(block²) "
-        "stays near-linear at 100 TB (no corpus-sized self-join).",
+    doc="Exact blocked word-bigram Jaccard near-dup pairs by shared-shingle "
+        "counting: (doc, shingle) rows equi-joined on (lang, log-length "
+        "band, shingle), counted per pair (|A∩B|), kept when "
+        "|A∩B|/|A∪B| >= 0.8. Bands ± 1 are complete for J>=0.8 by the "
+        "size-ratio bound; pairs sharing no shingle are never formed.",
     tags=("dedup",),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        block_col="lang", n=2, threshold=0.8, length_band=True,
+        block_col="lang", n=2, threshold=0.8,
     )
 
 
@@ -152,7 +153,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     gt = ngram_jaccard_pairs(
-        docs, "doc_id", "text", block_col="lang", n=2, threshold=0.8, length_band=True
+        docs, "doc_id", "text", block_col="lang", n=2, threshold=0.8
     )
     cand = minhash_lsh_candidates(
         docs, "doc_id", "text", shingle_n=3, num_perm=32, bands=8
@@ -208,8 +209,10 @@ _COMPONENTS_ORACLE = _COMPONENTS_CTES + """
         "pipelines keep min-id per component): exact-Jaccard pairs -> "
         "alternating large-star/small-star contraction "
         "(operators/components.py — O(log^2) rounds, lineage-truncated, no "
-        "driver graph state). Oracle: DuckDB recursive-CTE transitive "
-        "closure with min-label fold — the iterative algorithm IS "
+        "driver graph state). The pairs are lazy: the loop's first eager "
+        "checkpoint executes the whole upstream pair plan, so a profile "
+        "books pair generation to the components loop. Oracle: DuckDB "
+        "recursive-CTE transitive closure with min-label fold — the iterative algorithm IS "
         "SQL-expressible via WITH RECURSIVE at oracle scale.",
     tags=("dedup", "components", "iterative"),
 )
@@ -218,7 +221,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        block_col="lang", n=2, threshold=0.8, length_band=True,
+        block_col="lang", n=2, threshold=0.8,
     )
     comp = connected_components(pairs, src="a_id", dst="b_id")
     return comp.select(F.col("node").alias("doc_id"), F.col("root").alias("root_id"))

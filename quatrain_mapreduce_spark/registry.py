@@ -76,58 +76,58 @@ def register(name: str, oracle: str | None = None, doc: str = "", tags: tuple[st
 # regenerate. The tail (checked locally by tools/check_oracle.py) holds the
 # remaining green queries plus rows-only approximate operators whose
 # oracles can't exist.
-WINDOW_LEDGER_THROUGH = "r12"
+WINDOW_LEDGER_THROUGH = "r14"
 DRIVER_WINDOW: tuple[str, ...] = (
-    "merge_upsert_orders",  # last green: r05
-    "multimodal_frames",  # last green: r05
-    "online_agg_events",  # last green: r05
-    "percentile_agg",  # last green: r05
-    "pii_scrub",  # last green: r05
-    "scd2_user_state",  # last green: r05
-    "seqfile_roundtrip",  # last green: r05
-    "sql_ddl_roundtrip",  # last green: r05
-    "counters_observe",  # last green: r06
-    "sketch_bounds",  # last green: r06
-    "pivot_wide",  # last green: r05
-    "range_frame_window",  # last green: r05
-    "repetition_filter",  # last green: r05
-    "rollup_agg",  # last green: r05
-    "similarity_ivf_exact",  # last green: r05
-    "skip_bad_records",  # last green: r05
-    "sql_groupby2",  # last green: r05
-    "sql_join2",  # last green: r05
-    "sql_partition_pruning",  # last green: r05
-    "sql_subq",  # last green: r05
-    "sql_transform",  # last green: r05
-    "stratified_sample",  # last green: r05
-    "stream_dedup",  # last green: r05
-    "stream_late_data",  # last green: r05
-    "tpch_q3_shape",  # last green: r05
-    "train_val_split",  # last green: r05
-    "window_distribution",  # last green: r05
-    "bigram_lm_score",  # last green: r06
-    "bpe_pair_counts",  # last green: r06
-    "chunk_documents",  # last green: r06
-    "cooccurrence_lift",  # last green: r06
-    "cq_moving_avg",  # last green: r06
-    "cq_tumbling_window",  # last green: r06
-    "cube_agg",  # last green: r06
-    "dedup_incremental_lsh",  # last green: r06
-    "dedup_keep_best",  # last green: r06
-    "dedup_spans",  # last green: r06
-    "distcp_roundtrip",  # last green: r06
-    "doc_similarity_pairs",  # last green: r06
-    "har_roundtrip",  # last green: r06
-    "heavy_hitters_topk",  # last green: r06
-    "jsonl_roundtrip",  # last green: r06
-    "kv_text_roundtrip",  # last green: r06
-    "multimodal_features",  # last green: r06
-    "multiple_inputs_union",  # last green: r06
-    "online_agg_topk",  # last green: r06
-    "pipes_wordcount",  # last green: r06
-    "salted_join_orders",  # last green: r06
-    "seqfilter_scan",  # last green: r06
-    "sessionize_events",  # last green: r06
+    "source_mixture",  # last green: r06
+    "sql_case_sensitivity",  # last green: r06
+    "stream_curation",  # last green: r06
+    "tagged_join_shape",  # last green: r06
+    "textrank_keywords",  # last green: r06
+    "anomaly_mad",  # last green: r08
+    "cdc_apply_orders",  # last green: r08
+    "cohort_retention",  # last green: r08
+    "pandas_udaf_weighted_avg",  # last green: r09
+    "salted_agg",  # last green: r09
+    "sql_cast1",  # last green: r06
+    "sql_union",  # last green: r06
+    "stream_jdbc_serving",  # last green: r06
+    "stream_stream_join",  # last green: r06
+    "temperature_sample",  # last green: r06
+    "tfidf_keywords",  # last green: r06
+    "tokenize_ids",  # last green: r06
+    "xml_roundtrip",  # last green: r06
+    "adaptive_quality_filter",  # last green: r08
+    "anomaly_mad_approx",  # last green: r08
+    "bm25_search",  # last green: r08
+    "chi_square_type_hour",  # last green: r08
+    "contamination_score",  # last green: r08
+    "corpus_diff",  # last green: r08
+    "dedup_jaccard_prefix",  # last green: r08
+    "dedup_span_extract",  # last green: r08
+    "funnel_analysis",  # last green: r08
+    "graph_bfs_reach",  # last green: r08
+    "graph_summary",  # last green: r08
+    "incremental_rollup_merge",  # last green: r08
+    "integrity_report",  # last green: r08
+    "json_struct_parse",  # last green: r08
+    "k_anonymity_audit",  # last green: r08
+    "missing_hours",  # last green: r08
+    "pagerank_scores",  # last green: r08
+    "profile_orders",  # last green: r08
+    "record_linkage_fuzzy",  # last green: r08
+    "resample_ffill",  # last green: r08
+    "session_path_mining",  # last green: r08
+    "sessionize_incremental",  # last green: r08
+    "sql_distribute_sort_by",  # last green: r08
+    "sql_intersect_except",  # last green: r08
+    "sql_mapjoin_hint",  # last green: r08
+    "sql_qcorpus_input",  # last green: r08
+    "sql_qcorpus_joins",  # last green: r08
+    "sql_qcorpus_sample",  # last green: r08
+    "sql_qcorpus_scalar",  # last green: r08
+    "sql_window_over",  # last green: r08
+    "stream_auc_monitor",  # last green: r08
+    "stream_cdc_apply",  # last green: r08
 )
 # Rows-only by design (no SQL-expressible oracle; each differential- or
 # precision-gated in pytest): bpe_train_merges, bpe_encode_corpus,

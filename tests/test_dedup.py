@@ -262,3 +262,13 @@ def test_incremental_lsh_reingested_doc_no_self_pair(spark):
     bands = lsh_band_rows(sh, "doc_id", num_perm=32, bands=8, max_bucket=100)
     cand = incremental_lsh_candidates(bands, bands, "doc_id").collect()
     assert cand == []
+
+
+@pytest.mark.parametrize("threshold", [0.0, -0.5, 1.5, float("nan")])
+def test_ngram_jaccard_rejects_threshold_outside_unit_interval(spark, threshold):
+    """Overlap counting emits only pairs sharing a shingle, which is
+    complete only for t > 0; t = 0 used to die in math.log(1/t) with a
+    ZeroDivisionError and t < 0 with a math domain error."""
+    docs = spark.createDataFrame([(1, "a b c", "en")], "doc_id long, text string, lang string")
+    with pytest.raises(ValueError, match="threshold"):
+        ngram_jaccard_pairs(docs, "doc_id", "text", "lang", threshold=threshold)

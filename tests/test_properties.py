@@ -8,7 +8,7 @@ compares against an independent pure-Python model of the semantics.
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -97,6 +97,62 @@ def test_jaccard_bounds_and_symmetry(spark, a, b):
     assert 0.0 <= r["jab"] <= 1.0
     assert abs(r["jab"] - r["jba"]) < 1e-12
     assert abs(r["jaa"] - 1.0) < 1e-12
+
+
+def _jaccard_brute_force(docs, n, t):
+    """All same-block pairs (a < b) with word n-gram string-set Jaccard
+    >= t — a pure-Python model with no banding, hashing or pruning. A doc
+    with fewer than n tokens has no shingles and pairs with nothing."""
+    sets = {}
+    for doc_id, text, block in docs:
+        toks = [w for w in text.split(" ") if w]
+        sets[doc_id] = (block, {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)})
+    out = set()
+    for a, (blk_a, sa) in sets.items():
+        for b, (blk_b, sb) in sets.items():
+            if a < b and blk_a == blk_b and sa and sb:
+                inter = len(sa & sb)
+                jac = inter / (len(sa) + len(sb) - inter)
+                if jac >= t:
+                    out.add((a, b, jac))
+    return out
+
+
+_doc_text = st.lists(st.sampled_from("a b c d e f".split()), max_size=10).map(" ".join)
+
+
+@settings(**{**SETTINGS, "max_examples": 16})
+@given(
+    texts=st.lists(st.tuples(_doc_text, st.sampled_from(["x", "y"])), min_size=1, max_size=14),
+    grow=st.lists(st.sampled_from("a b c d e f".split()), max_size=4),
+    ids=st.lists(st.integers(-(2 ** 40), 2 ** 40), min_size=18, max_size=18, unique=True),
+    id_type=st.sampled_from(["long", "string"]),
+    n=st.sampled_from([1, 2, 3]),
+    t=st.one_of(st.just(1.0), st.floats(min_value=0.05, max_value=1.0)),
+)
+# cross-band pair: 4 and 5 distinct bigrams sit in log-size bands 6 and 7
+# at t = 0.8, and J = 4/5 = 0.8 exactly
+@example(texts=[("a b c d e", "x"), ("a b c d e f", "x"), ("a", "x")], grow=[],
+         ids=list(range(18)), id_type="long", n=2, t=0.8)
+# J = 1 pairs only, with string ids ordered lexicographically ("10" < "9")
+@example(texts=[("a b c", "x")] * 11, grow=[], ids=list(range(18)),
+         id_type="string", n=2, t=1.0)
+def test_ngram_jaccard_pairs_match_brute_force(spark, texts, grow, ids, id_type, n, t):
+    """ngram_jaccard_pairs == the brute-force model on random small
+    corpora over a 6-word vocabulary: same pairs and bit-identical jac.
+    Each doc is also copied with ``grow`` appended, which plants near-dups
+    one or more size bands apart."""
+    from quatrain_mapreduce_spark.operators.dedup import ngram_jaccard_pairs
+
+    rows = texts + [(f"{txt} {' '.join(grow)}", blk) for txt, blk in texts[:4]]
+    cast = str if id_type == "string" else int
+    docs = [(cast(i), txt, blk) for i, (txt, blk) in zip(ids, rows)]
+    df = spark.createDataFrame(docs, f"doc_id {id_type}, text string, lang string")
+    got = {
+        (r["a_id"], r["b_id"], r["jac"])
+        for r in ngram_jaccard_pairs(df, "doc_id", "text", "lang", n=n, threshold=t).collect()
+    }
+    assert got == _jaccard_brute_force(docs, n, t)
 
 
 @settings(**SETTINGS)

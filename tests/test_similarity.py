@@ -162,10 +162,10 @@ def test_ivf_build_deterministic_and_covering(spark, clustered):
 
 
 def test_fold_gate_fallback_matches_literal_fold(spark, clustered, monkeypatch):
-    """Above FOLD_MAX_LITERALS the IVF/PQ assignments fall back to the
-    broadcast-join + max_by/min_by shape (ADVICE r13: the literal fold is
-    O(n_lists*dim) plan nodes per Lloyd pass) — assignments and codes must
-    be identical either way."""
+    """Above FOLD_MAX_LITERALS the IVF/PQ folds read the centroids from a
+    broadcast-joined column instead of literals (ADVICE r13: the literal
+    fold is O(n_lists*dim) plan nodes per Lloyd pass) — assignments,
+    codes and the codebook means must be identical either way."""
     from quatrain_mapreduce_spark.operators import similarity as sim
 
     _, a_fold = sim.ivf_build(clustered, "vec_id", "embedding", dim=DIM, n_lists=8)
