@@ -10,10 +10,11 @@ extensions, each designed for the 100 TB path:
                    overlap counting — (doc, shingle) rows, equi-join on
                    the shingle, count per pair. Ground truth; its join
                    rows grow with shingle document frequency per block.
-- minhash_lsh_pairs: shingle → minhash signature → banded LSH buckets →
-                   bucket self-join → exact-jaccard verify. The standard
-                   near-dup pipeline (Broder '97): candidate generation is
-                   linear in corpus size; only colliding pairs are verified.
+- minhash_lsh_candidates: shingle → minhash signature → banded LSH
+                   buckets → bucket self-join. The standard near-dup
+                   candidate generator (Broder '97), linear in corpus size;
+                   ``verify_pairs`` then checks only the colliding pairs
+                   (``minhash_lsh_pairs`` is that composition).
 - simhash_pairs:   64-bit simhash signatures (Charikar '02) via a vectorized
                    Pandas UDF, banded on 16-bit chunks, hamming-verified with
                    JVM-side bit_count(xor).
@@ -139,8 +140,8 @@ def ngram_jaccard_pairs(
     SCALE LIMIT: a shingle shared by k docs of one block and band yields
     k² join rows, and block sizes grow with the corpus, so this exact
     enumeration is the oracle-checkable ground truth, not the 100 TB path.
-    At scale, generate candidates with ``minhash_lsh_pairs`` (linear) and
-    verify them with ``verify_pairs`` (touches candidates only) — the
+    At scale, generate candidates with ``minhash_lsh_candidates`` (linear)
+    and verify them with ``verify_pairs`` (touches candidates only) — the
     composition ``dedup_components_lsh`` demonstrates.
     """
     if not 0.0 < threshold <= 1.0:
@@ -288,41 +289,50 @@ def minhash_lsh_candidates(
     bands: int = 8,
     max_bucket: int = 1000,
 ) -> DataFrame:
-    """Distinct LSH candidate pairs (a_id, b_id), WITHOUT the exact-Jaccard
-    verify — for pipelines that run their OWN downstream verification
-    (``verify_pairs`` at the pair-definition's n/threshold), where
-    ``minhash_lsh_pairs``' interior verify is a redundant second pass: it
-    re-joins both shingle sets onto every candidate and filters at the LSH
-    threshold, only for the caller to re-shingle and re-filter at the real
-    one. Composition equivalence (dedup_components_lsh and family): the
-    final edge set is candidates ∩ {exact-verified pairs}; the interior
-    0.5-filter could only REMOVE candidates that the exact verify keeps, and
-    the driver-checked ``dedup_lsh_recall`` gate pins candidate recall at
-    1.0 over the ground truth — so with or without the interior verify the
-    verified edge set equals the ground truth (oracle-checked per round).
+    """Distinct LSH candidate pairs (a_id, b_id), a_id < b_id: the one
+    MinHash band self-join of the engine. Pairs come out unverified; the
+    caller verifies them with ``verify_pairs`` at its own pair definition
+    (``minhash_lsh_pairs`` is exactly that composition).
 
-    Plan shape vs the full pipeline: the verify-side joins (and the persist
-    they required) are gone — candidate generation is shingle → signature →
-    band explode → bucket self-join → distinct, exactly the linear-in-
-    corpus half. The band-rows frame feeds both self-join sides and is
-    deliberately NOT persisted: a 6-rep interleaved A/B of the full
-    dedup_components_lsh pipeline measured recompute ahead of a
-    MEMORY_AND_DISK shingle persist (min 3.26 s vs 3.36, med 4.00 vs 4.60
-    at sf0.1) — the same materialization-barrier trade r13 measured when
-    it rejected the band-rows persist inside minhash_lsh_pairs.
+    Pair definition of the LSH pipelines (``dedup_components_lsh``,
+    ``dedup_keep_best``, ``leakage_safe_split``; ``dedup_incremental_lsh``
+    probes the same band rows): a pair is a near-duplicate iff it is an
+    LSH candidate here at (shingle_n=3, 8 bands × 4 rows) AND
+    ``verify_pairs`` keeps it at (n=2, τ=0.8, same lang). That equals the
+    exact ground truth (``ngram_jaccard_pairs`` at n=2, τ=0.8) only where
+    the candidates cover every ground-truth pair. Recall is probabilistic:
+    a pair with trigram Jaccard s collides with probability 1-(1-s^4)^8,
+    and a bigram-J ≥ 0.8 pair can have a lower trigram J. Recall 1.0 is
+    checked only on the sf0.1 fixture, by ``dedup_lsh_recall``'s oracle;
+    elsewhere pairs can be missed (the benchmark generator's corpus at
+    seed 108, ``perfbench/gen.py``, gives 420 of the exact 422 component
+    rows).
+
+    Plan shape: shingle → signature → band explode → bucket self-join →
+    distinct, the linear-in-corpus half. The band-rows frame feeds both
+    self-join sides and is deliberately NOT persisted: a 6-rep interleaved
+    A/B of the full dedup_components_lsh pipeline measured recompute ahead
+    of a MEMORY_AND_DISK shingle persist (min 3.26 s vs 3.36, med 4.00 vs
+    4.60 at sf0.1), the same materialization-barrier trade r13 measured
+    for a band-rows persist.
     """
     docs = (
         spread(df)
         .where(F.size(tokenize(text_col)) >= shingle_n)
         .select(F.col(id_col), word_shingles(text_col, shingle_n).alias("sh"))
     )
-    band_rows = lsh_band_rows(docs, id_col, num_perm, bands, max_bucket)
+    return _bucket_pairs(lsh_band_rows(docs, id_col, num_perm, bands, max_bucket), id_col).distinct()
+
+
+def _bucket_pairs(band_rows: DataFrame, id_col: str) -> DataFrame:
+    """(a_id, b_id), a_id < b_id, for every two rows of ``band_rows`` that
+    share a (band, bhash) bucket: the band self-join. A pair colliding in
+    several bands appears once per band."""
     a, b = band_rows.alias("a"), band_rows.alias("b")
     return (
         a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bhash") == F.col("b.bhash"))
                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
         .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
-        .distinct()
     )
 
 
@@ -336,45 +346,14 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     max_bucket: int = 1000,
 ) -> DataFrame:
-    """MinHash + banded LSH near-duplicate pairs, exact-Jaccard verified.
-
-    Pipeline: shingle → signature → explode into ``bands`` band-hashes →
-    self-join within (band, band_hash) buckets → distinct candidate pairs →
-    verify exact Jaccard on shingle sets ≥ threshold. Candidate generation is
-    one explode + one shuffle; verification touches only colliding pairs.
-    """
-    # cheap pushdown-safe filter; the expensive shingle projection stays
-    # above the spread repartition (see ngram_jaccard_pairs note)
-    docs = (
-        spread(df)
-        .where(F.size(tokenize(text_col)) >= shingle_n)
-        .select(F.col(id_col), word_shingles(text_col, shingle_n).alias("sh"))
-    )
-    # shingling is the expensive narrow stage and is consumed three times
-    # (signature branch + both verify-join sides): cache it. MEMORY_AND_DISK
-    # so a 100 TB corpus's shingle sets spill instead of recomputing.
-    from pyspark.storagelevel import StorageLevel
-
-    docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-    band_rows = lsh_band_rows(docs, id_col, num_perm, bands, max_bucket)
-    a, b = band_rows.alias("a"), band_rows.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bhash") == F.col("b.bhash"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
-        .distinct()
-    )
-    sets = docs.select(F.col(id_col), F.col("sh"))
-    return (
-        cand.join(sets.withColumnsRenamed({id_col: "a_id", "sh": "a_sh"}), "a_id")
-        .join(sets.withColumnsRenamed({id_col: "b_id", "sh": "b_sh"}), "b_id")
-        # filter on the RAW division, round only the reported column:
-        # rounding first admitted pairs up to 5e-7 below the threshold,
-        # disagreeing with ngram_jaccard_pairs / verify_pairs at the
-        # boundary (those compare unrounded — dedup.py 'no rounding
-        # needed' note)
-        .where(_jaccard(F.col("a_sh"), F.col("b_sh")) >= threshold)
-        .select("a_id", "b_id", F.round(_jaccard(F.col("a_sh"), F.col("b_sh")), 6).alias("jac"))
+    """MinHash + banded LSH near-duplicate pairs, exact-Jaccard verified:
+    ``minhash_lsh_candidates`` followed by ``verify_pairs`` at the same
+    shingle size (n = ``shingle_n``) and ``threshold``. Returns (a_id,
+    b_id, jac) with ``jac`` the exact shingle Jaccard rounded to 6 dp; the
+    threshold applies to the unrounded value."""
+    cand = minhash_lsh_candidates(df, id_col, text_col, shingle_n, num_perm, bands, max_bucket)
+    return verify_pairs(df, cand, id_col, text_col, n=shingle_n, threshold=threshold).select(
+        "a_id", "b_id", F.round("jac", 6).alias("jac")
     )
 
 
@@ -406,13 +385,7 @@ def incremental_lsh_candidates(
             F.greatest(F.col(f"a.{id_col}"), F.col(f"e.{id_col}")).alias("b_id"),
         )
     )
-    b = arriving_bands.alias("b")
-    within = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bhash") == F.col("b.bhash"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
-    )
-    return cross.unionByName(within).distinct()
+    return cross.unionByName(_bucket_pairs(arriving_bands, id_col)).distinct()
 
 
 def verify_pairs(
@@ -444,8 +417,8 @@ def verify_pairs(
         cols.append(F.col(block_col).alias("blk"))
     # persist: the shingle frame feeds BOTH join sides below, and without
     # it the corpus is tokenized/shingled/hashed twice per action — the
-    # same ~2x the sibling operators measured when they added this
-    # (ngram_jaccard_pairs / minhash_lsh_pairs MEMORY_AND_DISK notes)
+    # same ~2x ngram_jaccard_pairs measured when it added its
+    # MEMORY_AND_DISK persist
     sets = (spread(df).where(F.size(tokenize(text_col)) >= n).select(*cols)
             .persist(StorageLevel.MEMORY_AND_DISK))
     a_renames = {id_col: "a_id", "sh": "a_sh"}

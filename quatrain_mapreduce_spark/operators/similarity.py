@@ -30,7 +30,7 @@ results are deterministic and engine-comparable.
 
 from __future__ import annotations
 
-import os
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -38,20 +38,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Literal-fold size gate (ADVICE r13): the scan-local argmin/argmax folds in
-# ivf_build / pq_train / pq_encode embed every centroid/codeword component
-# as a Catalyst literal — O(n_lists·dim) (IVF) / O(k·dim) (PQ) expression
-# nodes REBUILT PER LLOYD PASS. At production index sizes (n_lists=4096,
-# dim=768, or k=256) that is millions of nodes: plan analysis/serialization
-# dominates runtime or exhausts driver memory. Above this many embedded
-# doubles the operators ship the SAME centroid/codeword array as a column
-# of a broadcast-joined frame instead (``_with_codebook``,
-# ``ivf_build.assign``): plan size O(1) in the index parameters, and the
-# identical fold runs over the identical row order — a broadcast join
-# preserves the streamed side's partitions — so assignments, codes AND the
-# Lloyd means aggregated from them are bit-identical on both sides of the
-# gate.
-FOLD_MAX_LITERALS = int(os.environ.get("SPARK_GRAFT_FOLD_MAX_LITERALS", "50000"))
+# Literal-fold size gate (ADVICE r13): the most centroid/codeword doubles
+# ``_with_codebook`` embeds as Catalyst literals. Literal codebooks are
+# O(entries·dim) expression nodes rebuilt per Lloyd pass; at production
+# index sizes (n_lists=4096, dim=768, or k=256) plan analysis and
+# serialization would dominate runtime or exhaust driver memory.
+FOLD_MAX_LITERALS = 50_000
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -71,8 +63,8 @@ def cosine(a: Column, b: Column) -> Column:
     # otherwise raises DIVIDE_BY_ZERO under Spark 4's default ANSI mode —
     # or, with ANSI off, yields NaN which sorts ABOVE every real score and
     # becomes the rank-1 neighbor of every query. Clamped, a zero vector
-    # scores 0.0 against everything. Same guard as the vectorized paths
-    # (clustering.py) and quantize_embeddings.
+    # scores 0.0 against everything. Same guard as semantic_dedup's pair
+    # verify (clustering.py) and quantize_embeddings.
     return _dot(a, b) / F.greatest(_norm(a) * _norm(b), F.lit(1e-300))
 
 
@@ -283,10 +275,10 @@ def ivf_build(
     Seeds = the ``n_lists`` corpus vectors with the smallest
     ``xxhash64(seed, id)`` (a deterministic uniform sample — no data order
     dependence), refined by ``lloyd_iters`` spherical-kmeans iterations:
-    assign every vector to its max-cosine centroid (a scan-local argmax
-    fold over the literal centroid array — zero shuffle, no N×C row
-    expansion), then recompute each list's elementwise mean with ``dim``
-    avg aggregates (no explode — one shuffle of C×dim partial aggs).
+    assign every vector to its max-cosine centroid (``_nearest_entry`` —
+    zero shuffle, no N×C row expansion), then recompute each list's
+    elementwise mean with ``dim`` avg aggregates (no explode — one shuffle
+    of C×dim partial aggs).
 
     Returns (centroids, assigned): centroids(list_id, c_vec) — index
     metadata, C×dim doubles, materialized driver-side like any ANN coarse
@@ -322,48 +314,9 @@ def ivf_build(
         )
 
     def assign(cents: list[list[float]]) -> DataFrame:
-        # Scan-local argmax fold over the (index-metadata-sized) centroid
-        # list — zero shuffle, zero row expansion. The former crossJoin +
-        # max_by(list_id, struct(sim, -list_id)) planned as a SortAggregate
-        # pair over the N×C expansion (a struct extremum buffer is not
-        # hash-aggregatable — r13, same fix as the SemDeDup assignment):
-        # two full sorts of C× the corpus per Lloyd pass. The fold keeps
-        # max_by's exact tie-break (ascending list_id, replace on
-        # strictly-greater cosine => lowest list_id wins ties). Up to
-        # FOLD_MAX_LITERALS embedded doubles the list is a literal; above,
-        # the literal plan itself becomes the bottleneck, so the same list
-        # rides a one-row broadcast cross join (same fold, same row order:
-        # assignments and means are bit-identical either way).
-        if len(cents) * dim > FOLD_MAX_LITERALS:
-            entries = [(i, [float(x) for x in v]) for i, v in enumerate(cents)]
-            src = c.crossJoin(F.broadcast(spark.createDataFrame(
-                [(entries,)], "cents array<struct<lid:int,c_vec:array<double>>>"
-            )))
-            cent_arr = F.col("cents")
-        else:
-            src = c
-            cent_arr = F.array(*[
-                F.struct(
-                    F.lit(i).alias("lid"),
-                    F.array(*[F.lit(float(x)) for x in v])
-                     .cast("array<double>").alias("c_vec"),
-                )
-                for i, v in enumerate(cents)
-            ])
-        scored = F.transform(
-            cent_arr,
-            lambda ct: F.struct(
-                cosine(F.col("vec"), ct["c_vec"]).alias("s"),
-                ct["lid"].alias("lid"),
-            ),
-        )
-        best = F.aggregate(
-            scored,
-            F.struct(F.lit(float("-inf")).alias("s"),
-                     F.lit(None).cast("int").alias("lid")),
-            lambda a, x: F.when(x["s"] > a["s"], x).otherwise(a),
-        )
-        return src.select(F.col(id_col), "vec", best["lid"].alias("list_id"))
+        src, entries = _with_codebook(c, {(0, i): v for i, v in enumerate(cents)})
+        nearest = _nearest_entry(entries, lambda cv: cosine(F.col("vec"), cv))
+        return src.select(F.col(id_col), "vec", nearest.alias("list_id"))
 
     for _ in range(lloyd_iters):
         assigned = assign(centroids)
@@ -481,7 +434,7 @@ def embedding_neardup_pairs(
     # band rows carry NO vector payload: the window and the band self-join
     # would otherwise exchange n_bands copies of the widest column in the
     # table; vectors rejoin by id only for the candidate-bounded cosine
-    # verify (the same shape as minhash_lsh_pairs' band rows)
+    # verify (the same shape as minhash_lsh_candidates' band rows)
     v = df.select(F.col(id_col), F.explode(F.array(*bands)).alias("bd")) \
           .select(id_col, "bd.band", "bd.bkey")
     w = Window.partitionBy("band", "bkey")
@@ -612,69 +565,94 @@ def activity_profile_knn(events: DataFrame, user_col: str, ts_col: str,
 
 
 def _with_codebook(
-    subs: DataFrame, book: dict[tuple[int, int], list[float]], dim: int,
+    rows: DataFrame, book: dict[tuple[int, int], list[float]],
 ) -> tuple[DataFrame, Column]:
-    """``subs`` (sub_id, sv) rows and, as a column, the codewords of each
-    row's subspace — array<struct<cid, c_vec>> in ascending code_id, the
-    input of ``_nearest_code``. Up to FOLD_MAX_LITERALS embedded doubles
-    the per-subspace arrays are literals indexed by ``sub_id``; above, they
-    ride a broadcast join on ``sub_id`` (one row per subspace; the join
-    keeps ``subs``' partitions and row order, so codes and the Lloyd means
-    are bit-identical on both sides of the gate)."""
-    per_sub = [
-        (s, [(cid, book[(s, cid)]) for cid in sorted(c for s2, c in book if s2 == s)])
+    """``rows`` and, as a column, the entries of each row's codebook: the
+    ``entries`` input of ``_nearest_entry``. ``book`` maps (sub_id, entry
+    id) to a vector. With more than one subspace (PQ) ``rows`` carries its
+    subspace in ``sub_id``; IVF's centroid list is the one-subspace case.
+
+    Up to FOLD_MAX_LITERALS embedded doubles the codebooks are literals
+    indexed by ``sub_id``. Above, the same arrays ride a broadcast frame,
+    cross-joined (one subspace) or joined on ``sub_id``: plan size O(1) in
+    the index parameters. A broadcast join keeps ``rows``' partitions and
+    row order, so the entries chosen and the Lloyd means aggregated from
+    them are bit-identical on both sides of the gate."""
+    books = [
+        [(i, [float(x) for x in book[(s, i)]]) for s2, i in sorted(book) if s2 == s]
         for s in sorted({s for s, _ in book})
     ]
-    n_codes = max((c for _, c in book), default=-1) + 1
-    if n_codes * dim > FOLD_MAX_LITERALS:
-        frame = subs.sparkSession.createDataFrame(
-            per_sub, "sub_id int, codes array<struct<cid:int,c_vec:array<double>>>"
+    if sum(len(v) for b in books for _, v in b) > FOLD_MAX_LITERALS:
+        frame = rows.sparkSession.createDataFrame(
+            list(enumerate(books)), "sub_id int, book array<struct<id:int,vec:array<double>>>"
         )
-        return subs.join(F.broadcast(frame), "sub_id"), F.col("codes")
-    books_arr = F.array(*[
+        if len(books) == 1:
+            return rows.crossJoin(F.broadcast(frame.select("book"))), F.col("book")
+        return rows.join(F.broadcast(frame), "sub_id"), F.col("book")
+    lits = [
         F.array(*[
             F.struct(
-                F.lit(cid).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in v])
-                 .cast("array<double>").alias("c_vec"),
+                F.lit(i).alias("id"),
+                F.array(*[F.lit(x) for x in v]).cast("array<double>").alias("vec"),
             )
-            for cid, v in codes
+            for i, v in b
         ])
-        for _, codes in per_sub
-    ])
-    return subs, F.element_at(books_arr, F.col("sub_id") + 1)
+        for b in books
+    ]
+    if len(books) == 1:
+        return rows, lits[0]
+    return rows, F.element_at(F.array(*lits), F.col("sub_id") + 1)
 
 
-def _nearest_code(codes_here: Column) -> Column:
-    """Scan-local nearest-codeword id for a (sub_id, sv) row over its
-    subspace's codewords (``_with_codebook``), folded for the min-L2 code,
-    ties to the LOWEST code_id — exactly the ordering of
-    ``min_by(code_id, struct(d, code_id))``. The former broadcast-join +
-    min_by(struct) shape planned as a SortAggregate pair over the N·m
-    subvector rows (a struct extremum buffer is not hash-aggregatable —
-    r13, same fix as the IVF/SemDeDup assignments); this fold is
-    zero-shuffle. The codebook is bounded index metadata (m·k rows) by
-    construction.
+def _nearest_entry(entries: Column, score: Callable[[Column], Column]) -> Column:
+    """Id of the entry of ``entries`` (array<struct<id, vec>>, ascending
+    id, from ``_with_codebook``) with the highest ``score(vec)``: max
+    cosine for IVF, min L2 (as -L2) for PQ. A scan-local fold — zero
+    shuffle, no row expansion — and the one arg-best rule of this module:
+
+    - the fold runs in ascending id and an entry replaces the running best
+      only on a strictly greater score, so the LOWEST id wins ties;
+    - a NaN or null score counts as -inf: it never beats a real score, and
+      a row with no real score (NaN or null components) gets the lowest id;
+    - a zero-norm vector scores 0.0 against every centroid (``cosine``'s
+      norm clamp), an all-way tie, so it also gets the lowest id.
     """
-    def l2(cv: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(F.col("sv"), cv, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-
+    neg_inf = F.lit(float("-inf"))
     scored = F.transform(
-        codes_here,
-        lambda ct: F.struct(l2(ct["c_vec"]).alias("d"), ct["cid"].alias("cid")),
+        entries,
+        lambda e: F.struct(
+            F.coalesce(F.nanvl(score(e["vec"]), neg_inf), neg_inf).alias("s"),
+            e["id"].alias("id"),
+        ),
     )
-    # the null-acc guard makes the first codeword the seed (so an all-NaN
-    # distance row still resolves to the lowest code_id, like min_by)
     best = F.aggregate(
         scored,
-        F.struct(F.lit(float("inf")).alias("d"),
-                 F.lit(None).cast("int").alias("cid")),
-        lambda a, x: F.when(a["cid"].isNull() | (x["d"] < a["d"]), x).otherwise(a),
+        F.struct(neg_inf.alias("s"), F.lit(None).cast("int").alias("id")),
+        lambda a, x: F.when(a["id"].isNull() | (x["s"] > a["s"]), x).otherwise(a),
     )
-    return best["cid"]
+    return best["id"]
+
+
+def _neg_l2(cv: Column) -> Column:
+    """-(squared L2 distance) from the row's ``sv`` subvector to ``cv``."""
+    return -F.aggregate(
+        F.zip_with(F.col("sv"), cv, lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0), lambda acc, x: acc + x,
+    )
+
+
+def _subvectors(df: DataFrame, key: str, vec_col: str, dim: int, m: int) -> DataFrame:
+    """(key, sub_id, sv): the ``m`` contiguous ``dim // m`` subvectors of
+    ``vec_col`` as double arrays, one row each — the PQ split."""
+    sub = dim // m
+    vec = F.col(vec_col).cast("array<double>")
+    return df.select(
+        F.col(key),
+        F.explode(F.array(*[
+            F.struct(F.lit(j).alias("sub_id"), F.slice(vec, j * sub + 1, sub).alias("sv"))
+            for j in range(m)
+        ])).alias("s"),
+    ).select(key, "s.sub_id", "s.sv")
 
 
 def pq_train(
@@ -699,8 +677,8 @@ def pq_train(
 
     Deterministic like ivf_build: per-subspace seeds are the k corpus
     subvectors with smallest xxhash64(seed, sub, id); Lloyd refinement
-    assigns by min L2 (a scan-local ``_nearest_code`` fold — zero shuffle
-    per iteration) and recomputes means with sub-dim avg
+    assigns by min L2 (``_nearest_entry`` — zero shuffle per iteration)
+    and recomputes means with sub-dim avg
     aggregates. Codebook is (sub_id, code_id, c_vec) — m*k rows of index
     metadata, driver-materialized exactly like any ANN header (FAISS).
     """
@@ -709,24 +687,13 @@ def pq_train(
     spark = corpus.sparkSession
     sub = dim // m
     assert sub * m == dim, "dim must divide evenly into m subspaces"
-    # spread: the scan-local code argmin inherits scan partitioning (see
-    # ivf_build note); no-op at real scale
-    subs = spread(corpus).select(
-        F.col(id_col),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(j).alias("sub_id"),
-                    F.slice(F.col(vec_col).cast("array<double>"),
-                            j * sub + 1, sub).alias("sv"),
-                )
-                for j in range(m)
-            ])
-        ).alias("s"),
-    ).select(id_col, "s.sub_id", "s.sv")
     from pyspark.storagelevel import StorageLevel
 
-    subs = subs.persist(StorageLevel.MEMORY_AND_DISK)
+    # spread: the scan-local code argmin inherits scan partitioning (see
+    # ivf_build note); no-op at real scale
+    subs = _subvectors(spread(corpus), id_col, vec_col, dim, m).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
     w = Window.partitionBy("sub_id").orderBy("h", id_col)
     seeds = (
@@ -747,9 +714,9 @@ def pq_train(
         )
 
     for _ in range(lloyd_iters):
-        with_book, codes = _with_codebook(subs, book, dim)
+        with_book, codes = _with_codebook(subs, book)
         assigned = with_book.select(
-            F.col(id_col), "sub_id", "sv", _nearest_code(codes).alias("code_id"),
+            F.col(id_col), "sub_id", "sv", _nearest_entry(codes, _neg_l2).alias("code_id"),
         )
         means = (
             assigned.groupBy("sub_id", "code_id")
@@ -776,7 +743,7 @@ def pq_encode(
 
     NOTE (ADVICE r13): when ``codebook`` is a DataFrame it is collected
     EAGERLY at call time (one Spark job per call) so the argmin can run as
-    a scan-local fold (``_nearest_code`` — zero shuffle, never more than
+    a scan-local fold (``_nearest_entry`` — zero shuffle, never more than
     N·m rows in flight). Callers composing lazy pipelines, or re-invoking
     per batch, should pass the already-collected dict form
     ``{(sub_id, code_id): c_vec}`` instead (``pq_train`` holds exactly
@@ -787,27 +754,14 @@ def pq_encode(
     """
     from quatrain_mapreduce_spark.operators.util import spread
 
-    sub = dim // m
-    subs = spread(corpus).select(
-        F.col(id_col),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(j).alias("sub_id"),
-                    F.slice(F.col(vec_col).cast("array<double>"),
-                            j * sub + 1, sub).alias("sv"),
-                )
-                for j in range(m)
-            ])
-        ).alias("s"),
-    ).select(id_col, "s.sub_id", "s.sv")
+    subs = _subvectors(spread(corpus), id_col, vec_col, dim, m)
     if isinstance(codebook, dict):
         book = codebook
     else:
         book = {(r["sub_id"], r["code_id"]): r["c_vec"] for r in codebook.collect()}
-    with_book, codes = _with_codebook(subs, book, dim)
+    with_book, codes = _with_codebook(subs, book)
     return with_book.select(
-        F.col(id_col), "sub_id", _nearest_code(codes).alias("code_id")
+        F.col(id_col), "sub_id", _nearest_entry(codes, _neg_l2).alias("code_id")
     )
 
 
@@ -835,26 +789,13 @@ def pq_topk(
     vectors should be pre-normalized when cosine rather than raw dot is
     the target metric.
     """
-    sub = dim // m
     codebook = pq_train(corpus, id_col, vec_col, dim, m=m, k=n_codes,
                         lloyd_iters=lloyd_iters, seed=seed)
     codes = pq_encode(corpus, codebook, id_col, vec_col, dim, m)
-    qsubs = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(j).alias("sub_id"),
-                    F.slice(F.col(vec_col).cast("array<double>"),
-                            j * sub + 1, sub).alias("qv"),
-                )
-                for j in range(m)
-            ])
-        ).alias("s"),
-    ).select("q_id", "s.sub_id", "s.qv")
+    qsubs = _subvectors(queries, id_col, vec_col, dim, m).withColumnRenamed(id_col, "q_id")
     lut = qsubs.join(F.broadcast(codebook), "sub_id").select(
         "q_id", "sub_id", "code_id",
-        _dot(F.col("qv"), F.col("c_vec")).alias("part"),
+        _dot(F.col("sv"), F.col("c_vec")).alias("part"),
     )
     scored = (
         codes.withColumnRenamed(id_col, "neighbor_id")
@@ -947,22 +888,10 @@ def ivfpq_topk(
         .where(F.col("crk") <= nprobe)
         .select("q_id", "q_vec", "list_id", "qc_dot")
     )
-    sub = dim // m
-    qsubs = probes.select("q_id", "q_vec").distinct().select(
-        "q_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(j).alias("sub_id"),
-                    F.slice(F.col("q_vec"), j * sub + 1, sub).alias("qv"),
-                )
-                for j in range(m)
-            ])
-        ).alias("s"),
-    ).select("q_id", "s.sub_id", "s.qv")
+    qsubs = _subvectors(probes.select("q_id", "q_vec").distinct(), "q_id", "q_vec", dim, m)
     lut = qsubs.join(F.broadcast(codebook), "sub_id").select(
         "q_id", "sub_id", "code_id",
-        _dot(F.col("qv"), F.col("c_vec")).alias("part"),
+        _dot(F.col("sv"), F.col("c_vec")).alias("part"),
     )
     cand = (
         codes.withColumnRenamed(id_col, "neighbor_id")

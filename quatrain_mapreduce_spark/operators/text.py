@@ -554,7 +554,7 @@ def count_discriminant_classifier(
     # counts has TWO live consumers (totals + model) and is deliberately
     # NOT persisted: the r13 4-arm A/B measured the persist as a 0.5 s
     # materialization-barrier LOSS at sf0.1 (min 1.22 s vs 0.72 s) — the
-    # same recompute-beats-persist trade as minhash_lsh_pairs' band rows.
+    # same recompute-beats-persist trade as minhash_lsh_candidates' band rows.
     # On a cluster where the train corpus dwarfs memory, persisting this
     # vocab-sized frame is the first knob to revisit.
     counts = tok.groupBy("token").agg(

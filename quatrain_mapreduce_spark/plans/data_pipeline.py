@@ -233,11 +233,13 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="The 100 TB form of dedup_components: MinHash-LSH candidate pairs "
         "(linear in corpus size) -> exact bigram-Jaccard verify restricted "
         "to candidates (operators/dedup.verify_pairs) -> star contraction. "
-        "Equal to the exact blocked-all-pairs variant whenever LSH recall "
-        "covers the ground truth — which is exactly what the driver-checked "
-        "dedup_lsh_recall gate proves; a recall miss would hash-mismatch "
-        "THIS query's oracle too, so the equality is continuously verified, "
-        "not assumed. Motivation measured at 10x bench data (SCALING.md): "
+        "Pair definition: an LSH candidate at (n=3, 8x4 bands) that verifies "
+        "at (n=2, tau=0.8, same lang). It equals the exact blocked-all-pairs "
+        "variant only where LSH recall covers the ground truth. Recall is "
+        "probabilistic: it is checked as 1.0 on the sf0.1 fixture by "
+        "dedup_lsh_recall (a miss would also mismatch THIS query's oracle), "
+        "and the benchmark generator's corpus at seed 108 misses 2 of 422 "
+        "component rows. Motivation measured at 10x bench data (SCALING.md): "
         "ngram_jaccard_pairs' within-block candidate count grows "
         "quadratically with corpus size at fixed length/lang distribution, "
         "while the LSH candidate count stays linear.",
@@ -447,7 +449,12 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "while their twins sit in train (memorized-copy leakage). Here the "
         "split key is the near-dup COMPONENT root (LSH candidates -> exact "
         "verify -> star contraction -> coalesce singletons to themselves), "
-        "so a whole cluster lands on one side by construction. The output's "
+        "so a whole cluster lands on one side by construction. Pair "
+        "definition as in dedup_components_lsh: an LSH candidate at (n=3, "
+        "8x4 bands) that verifies at (n=2, tau=0.8, same lang); recall is "
+        "checked as 1.0 only on the sf0.1 fixture (dedup_lsh_recall) and is "
+        "probabilistic elsewhere, so a missed pair can straddle the split "
+        "without being counted in leaked_pairs. The output's "
         "leaked_pairs column — near-dup pairs straddling the split — is "
         "oracle-checked at exactly 0, and n_docs/id_sum hash-check the "
         "assignment itself (portable md5-nibble hash of the root id, same "

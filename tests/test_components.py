@@ -99,7 +99,7 @@ def test_keep_best_per_component_prefers_quality_over_min_id(spark):
         connected_components, keep_best_per_component,
     )
     from quatrain_mapreduce_spark.operators.dedup import (
-        minhash_lsh_pairs, verify_pairs,
+        minhash_lsh_candidates, verify_pairs,
     )
     from quatrain_mapreduce_spark.operators.text import quality_col
 
@@ -111,9 +111,9 @@ def test_keep_best_per_component_prefers_quality_over_min_id(spark):
         (5, "unrelated little text about nothing in particular", "en"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    cand = minhash_lsh_pairs(
-        docs, "doc_id", "text", shingle_n=3, num_perm=32, bands=8, threshold=0.5
-    ).select("a_id", "b_id")
+    cand = minhash_lsh_candidates(
+        docs, "doc_id", "text", shingle_n=3, num_perm=32, bands=8
+    )
     verified = verify_pairs(
         docs, cand, "doc_id", "text", n=2, threshold=0.8, block_col="lang"
     )

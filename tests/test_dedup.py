@@ -118,9 +118,10 @@ def test_incremental_lsh_reads_index_not_corpus(spark):
     """The incremental path must PROBE the staged index (a parquet scan of
     the lshindex dir), never re-derive existing-corpus band rows from
     documents — the per-increment-cost property. Also: its verified pairs
-    restricted to the increment equal the one-shot finder's pairs
-    similarly restricted (same thresholds), so increments lose nothing."""
-    from quatrain_mapreduce_spark.operators.dedup import minhash_lsh_pairs, verify_pairs
+    equal the one-shot candidates (``minhash_lsh_candidates``) verified at
+    the same pair definition and restricted to pairs touching the
+    increment, so increments lose nothing."""
+    from quatrain_mapreduce_spark.operators.dedup import minhash_lsh_candidates, verify_pairs
     from quatrain_mapreduce_spark.catalog import load_table
     from quatrain_mapreduce_spark.plans.data_pipeline import dedup_incremental_lsh
 
@@ -131,9 +132,9 @@ def test_incremental_lsh_reads_index_not_corpus(spark):
 
     inc = {(r["a_id"], r["b_id"]) for r in out.collect()}
     docs = load_table(spark, sf, "documents")
-    full_cand = minhash_lsh_pairs(
-        docs, "doc_id", "text", shingle_n=3, num_perm=32, bands=8, threshold=0.5
-    ).select("a_id", "b_id")
+    full_cand = minhash_lsh_candidates(
+        docs, "doc_id", "text", shingle_n=3, num_perm=32, bands=8
+    )
     full = verify_pairs(docs, full_cand, "doc_id", "text", n=2, threshold=0.8, block_col="lang")
     want = {
         (r["a_id"], r["b_id"]) for r in full.collect()

@@ -188,6 +188,64 @@ def test_fold_gate_fallback_matches_literal_fold(spark, clustered, monkeypatch):
     assert codes_bc == codes_fold
 
 
+def test_fold_fallback_just_above_the_real_cap(spark):
+    """IVF assignment and PQ encode one step above the real
+    FOLD_MAX_LITERALS, not monkeypatched: 782 entries x 64 dims = 50,048
+    doubles, so both read their codebooks from a broadcast frame. Each
+    pick must equal a numpy model of the fold's rule (max cosine / min L2,
+    lowest id on ties) over the same left-to-right double sums. Exact ties
+    are planted: repeated corpus vectors (both copies can become IVF
+    seeds), repeated PQ codewords, and an all-zero vector, which scores
+    cosine 0.0 on every list and lies at distance 0 from two zero
+    codewords."""
+    from quatrain_mapreduce_spark.operators import similarity as sim
+
+    dim, n_entries, m = 64, 782, 4
+    assert n_entries * dim > sim.FOLD_MAX_LITERALS >= (n_entries - 1) * dim
+    rng = np.random.RandomState(5)
+    x = rng.randn(1000, dim)
+    x[900:920] = x[0:20]
+    x[17] = 0.0
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in enumerate(x)],
+        "vec_id long, embedding array<double>",
+    )
+
+    def fold_sum(a):  # Spark's aggregate(..., 0D, acc + x): sequential
+        return np.cumsum(a, axis=-1)[..., -1]
+
+    cent_df, assigned = sim.ivf_build(df, "vec_id", "embedding", dim=dim,
+                                      n_lists=n_entries, lloyd_iters=0)
+    assert "BroadcastNestedLoopJoin" in assigned._jdf.queryExecution().executedPlan().toString()
+    cents = np.array([r["c_vec"] for r in sorted(cent_df.collect(), key=lambda r: r["list_id"])])
+    assert len(cents) == n_entries
+    c_nrm = np.sqrt(fold_sum(cents * cents))
+    got = {r["vec_id"]: r["list_id"] for r in assigned.collect()}
+    ties = 0
+    for i, v in enumerate(x):
+        cos = fold_sum(v * cents) / np.maximum(np.sqrt(fold_sum(v * v)) * c_nrm, 1e-300)
+        ties += int((cos == cos.max()).sum() > 1)
+        assert got[i] == int(np.argmax(cos)), i
+    assert got[17] == 0 and ties > 1
+
+    sub = dim // m
+    book = rng.randn(m, n_entries, sub)
+    book[:, 700] = book[:, 3]
+    book[:, 250] = book[:, 400] = 0.0
+    book[:, 500:510] = x[900:910].reshape(10, m, sub).transpose(1, 0, 2)
+    codes = sim.pq_encode(
+        df, {(s, c): list(book[s, c]) for s in range(m) for c in range(n_entries)},
+        "vec_id", "embedding", dim, m,
+    )
+    assert "BroadcastHashJoin" in codes._jdf.queryExecution().executedPlan().toString()
+    got = {(r["vec_id"], r["sub_id"]): r["code_id"] for r in codes.collect()}
+    for i, v in enumerate(x):
+        for s in range(m):
+            d = fold_sum((v[s * sub:(s + 1) * sub] - book[s]) ** 2)
+            assert got[(i, s)] == int(np.argmin(d)), (i, s)
+    assert {got[(17, s)] for s in range(m)} == {250}
+
+
 def test_pq_encode_accepts_collected_dict(spark, clustered):
     """The dict overload (ADVICE r13: lets callers reuse a driver-side
     codebook without pq_encode re-collecting per invocation) must encode
